@@ -21,27 +21,16 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val samples = sys.env.getOrElse("SPARK_GRAFT_BENCH_SAMPLES", "3").toInt.max(1)
     // host health before the JVM warms anything: lets a reader of the
     // emitted artifact tell box degradation from code regression without
     // any external context (thresholds in HostProbe/BASELINE.md)
     val boxPre = HostProbe.measure()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing floor (optimization r15): see Tables.localSession —
-      // keeps small-byte compute-dense post-shuffle stages (verify joins,
-      // pair expansion) at full parallelism; scale-neutral because the
-      // floor only binds when an exchange carries less than
-      // cores×minPartitionSize bytes.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the shared session definition (Tables.sessionConf), incl. the AQE
+    // coalescing floor that keeps small-byte compute-dense post-shuffle
+    // stages (verify joins, pair expansion) at full parallelism
+    val spark = Tables.localSession(cores = cpus)
 
     // warmup: JVM + codegen + parquet reader paths
     spark.range(1000000L).selectExpr("sum(id)").collect()

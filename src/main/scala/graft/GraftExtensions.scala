@@ -11,7 +11,7 @@ import graft.functions.{DotProduct, FieldExpr}
   * via configuration alone:
   *
   * `--conf spark.sql.extensions=graft.GraftExtensions`
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * or `withExtensions(new GraftExtensions)` on a session builder.
   *
   * Functions injected:
   *  - `field(str, v1, ...)` — MySQL FIELD ordering (SURVEY.md §7.3)

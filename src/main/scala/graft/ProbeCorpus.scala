@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Builds the adversarial replicated probe corpus ScaleProbe runs
+/** Builds the adversarial replicated probe corpus Sentinel runs
   * against: an sf dir's documents/embeddings/events replicated N× under
   * offset ids, so every document gains N−1 IDENTICAL twins. Near-dup
   * OUTPUT then grows ~quadratically in the copy count (C(N,2) pairs per

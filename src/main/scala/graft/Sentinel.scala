@@ -63,7 +63,7 @@ object Sentinel {
       "- BASELINE.md - and every regression this gate exists for " +
       "measured 3-10x). On a breach, re-run once to rule out an extreme burst."
 
-  /** Fold every output value (ScaleProbe's honesty rule): count() lets
+  /** Fold every output value (Bench's honesty rule): count() lets
     * Catalyst prune projection-shaped work to a bare scan. The row count
     * is count(*) — bit_xor(h) already forces the hash for every row, and
     * a guard like h =!= 0 would silently drop rows whose xxhash64
@@ -74,6 +74,47 @@ object Sentinel {
     safe.select(xxhash64(struct(safe.columns.map(col): _*)).as("h"))
       .agg(count(lit(1)).as("n"), expr("bit_xor(h)"))
       .collect().head.getLong(0)
+  }
+
+  /** The full composed CorpusPipeline chain, terminal chunks grain —
+    * the `pipeline_composed` op. Per-stage `observeCount` row accounting
+    * rides the terminal action (no extra jobs).
+    */
+  private def composedChain(
+      spark: SparkSession, dir: String, baseDir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    // the benchmark side is CONSTANT — an eval suite does not grow with
+    // the corpus; replicating it alongside is the §10.7 artifact, not
+    // the production shape
+    val benchmark = Tables.documents(spark, baseDir)
+      .filter(col("doc_id") % 97 === 0)
+    // the near-dup detector runs INSIDE the chain on the exact-deduped
+    // representatives (dedupNearSimhash — the scale-correct composition:
+    // raw-corpus pair output grows C(k,2) per duplicate group, ~3×10⁹
+    // rows at 1000×, while the representative graph is scale-invariant);
+    // its component resolution is the pipeline's one eager step and is
+    // included in the wall time
+    val chain = pipeline.CorpusPipeline(docs)
+      .observeCount("s0_input")
+      .dedupExact()
+      .observeCount("s1_dedup_exact")
+      .removeRepeatedSpans()
+      .observeCount("s2_span_clean")
+      .dedupNearSimhash()
+      .observeCount("s3_dedup_near")
+      .decontaminate(benchmark)
+      .observeCount("s4_decontaminate")
+      .redactPii()
+      .filterRepetition()
+      .observeCount("s5_filter_repetition")
+      .filterBoilerplate()
+      .observeCount("s6_filter_boilerplate")
+      .filterQualityEnsemble()
+      .observeCount("s7_filter_quality")
+      .sampleStratified(Map("en" -> 0.5), default = 0.2)
+      .withSplit(trainPct = 90)
+      .observeCount("s8_sampled_split")
+    chain.chunks()
   }
 
   /** An op returns (rows, optional self-timed seconds). Self-timing is
@@ -126,7 +167,7 @@ object Sentinel {
     "perplexity" -> timed((s, d, _) =>
       queries.CurationQueries.qPerplexity(s, d).count()),
     "pipeline_composed" -> timed((s, d, b) =>
-      fold(PipelineProbe.composedChain(s, d, b))),
+      fold(composedChain(s, d, b))),
     // steady-state daily dedup: standing index build is SETUP (untimed);
     // the gate watches one day's batch (signatures → upsert → pairs)
     "incremental_daily" -> ((s, d, b) => {

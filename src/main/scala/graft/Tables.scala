@@ -80,7 +80,20 @@ object Tables {
     if (df.rdd.getNumPartitions * 2 <= target) df.repartition(target) else df
   }
 
-  /** Local session with the same settings the driver uses, for tests/bench.
+  /** The settings every local entry point runs with — Bench, Verify,
+    * Sentinel, the probes, the demos and the perfbench harness all build
+    * their session through [[localSession]], which applies exactly this
+    * map (SessionConfSpec pins it).
+    *
+    * AQE coalescing floor (optimization r15, guide §2.2/§2.5): the
+    * default 1 MB floor sizes post-shuffle partitions by BYTES, but
+    * several verify-stage operators (array_intersect over shingle
+    * arrays, levenshtein, pair expansion) are CPU-dense per byte — a
+    * 6 MB exchange was coalesced to 5 tasks of ~3 s each while the other
+    * cores idled. 64 KB keeps small-byte compute-dense stages at full
+    * parallelism; at production shuffle sizes (GBs) the floor is
+    * irrelevant (advisory size governs), so this is scale-neutral.
+    * `SPARK_GRAFT_AQE_MIN_PARTITION_SIZE` overrides it for a deployment.
     *
     * `probeSplits = true` (probe/sentinel entry points only) adds
     * scan-split overrides for the replicated probe corpora (round 12):
@@ -89,37 +102,32 @@ object Tables {
     * pre-shuffle receipt (the whole signature pass) measured a single
     * core, which models nothing about a real deployment where a 5M-doc
     * table spans many splits. 1 MB splits + zero open cost give one task
-    * per ProbeCorpus output file. Non-probe entry points (IncrementalRunner,
-    * PipelineDemo, ExplainPlans) keep Spark's defaults — on real-sized
-    * data the 1 MB override would schedule one task per megabyte. Env
-    * overrides let probes A/B the split sizing itself.
+    * per ProbeCorpus output file. Non-probe entry points keep Spark's
+    * defaults — on real-sized data the 1 MB override would schedule one
+    * task per megabyte.
     */
+  def sessionConf(cores: Int, probeSplits: Boolean = false): Map[String, String] = {
+    val base = Map(
+      "spark.sql.shuffle.partitions" -> cores.toString,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
+        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false")
+    if (probeSplits)
+      base ++ Map(
+        "spark.sql.files.maxPartitionBytes" -> (1 << 20).toString,
+        "spark.sql.files.openCostInBytes" -> "0")
+    else base
+  }
+
+  /** The one local session builder: `local[cores]` with [[sessionConf]]. */
   def localSession(cores: Int = 32, probeSplits: Boolean = false): SparkSession = {
-    val b = SparkSession.builder()
+    val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing floor (optimization r15, guide §2.2/§2.5): the
-      // default 1 MB floor sizes post-shuffle partitions by BYTES, but
-      // several verify-stage operators (array_intersect over shingle
-      // arrays, levenshtein, pair expansion) are CPU-dense per byte —
-      // a 6 MB exchange was coalesced to 5 tasks of ~3 s each while the
-      // other cores idled. 64 KB keeps small-byte compute-dense stages
-      // at full parallelism; at production shuffle sizes (GBs) the floor
-      // is irrelevant (advisory size governs), so this is scale-neutral.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val withSplits =
-      if (probeSplits)
-        b.config("spark.sql.files.maxPartitionBytes",
-            sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", (1 << 20).toString))
-          .config("spark.sql.files.openCostInBytes",
-            sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES", "0"))
-      else b
-    val s = withSplits.getOrCreate()
+      .config(sessionConf(cores, probeSplits))
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -194,8 +194,9 @@ object Sinks {
     * persist materializes every column of a possibly corpus-scale
     * batch to executor storage. This is what makes the "stage the bulk
     * batch to parquet, then sink the scan" pattern genuinely
-    * cache-free. Anything non-file (HTTP source RDDs, local batches,
-    * mapPartitions lambdas) or non-deterministic keeps the persist.
+    * cache-free. Anything non-file (HTTP source RDDs and DSv2 REST
+    * scans, local batches, mapPartitions lambdas) or non-deterministic
+    * keeps the persist.
     */
   private[etl] def replayableScan(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.{logical => lp}
@@ -210,8 +211,10 @@ object Sinks {
     // to the conservative (persist-everything) branch
     def leafOk(l: lp.LogicalPlan): Boolean = l match {
       case _: org.apache.spark.sql.execution.datasources.LogicalRelation => true
-      case _: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        true
+      // only FILE-backed V2 scans: a REST source (arcgis, visualcrossing)
+      // is a V2 scan too, and re-executing it re-fetches a live feed
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.scan.isInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScan]
       case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
         // a MEMORY_ONLY cache can evict blocks and recompute them from
         // the ORIGINAL source between the dup pre-check and the write —

@@ -74,9 +74,7 @@ object ConnectedComponents {
       .localCheckpoint(true)
     var prevCount = obs0.get("n").asInstanceOf[Long]
     var changed = 1L
-    var rounds = 0
     while (changed > 0) {
-      rounds += 1
       // large-star over both directions: m(u) = min(N(u) ∪ {u}); every
       // neighbor v > u re-attaches to m. Each undirected edge {a,b}, a<b,
       // is emitted exactly once (from a's star as (b, m(a))), already in
@@ -130,8 +128,6 @@ object ConnectedComponents {
       val prev = e
       e = marked
       prev.unpersist()
-      if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round=$rounds n=$n changed=$changed")
       // Star-forest early exit (optimization r16): the alternation's
       // fixpoints are EXACTLY star forests centered at component minima —
       // the high→low orientation makes every star center its component's
@@ -159,15 +155,9 @@ object ConnectedComponents {
           .groupBy(col("u"))
           .agg(sum(col("s")).as("cu"), min(col("s")).as("mi"))
           .filter(col("cu") > 1L || (col("cu") >= 1L && col("mi") === 0L))
-        if (bad.isEmpty) {
-          changed = 0
-          if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-            System.err.println(s"[cc] round=$rounds star-forest early exit")
-        }
+        if (bad.isEmpty) changed = 0
       }
     }
-    if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] rounds=$rounds edges=$prevCount")
     // fixpoint is a star forest centered at component minima: leaves take
     // their center's id, centers (and isolated vertices) take their own
     verts.join(e.select(col("u").as("id"), col("v").as("comp")),

@@ -57,7 +57,7 @@ object IncrementalDedupQueries {
     * really broadcasts ≤ ~2 GiB, 4× under Spark's 8 GB hard limit
     * instead of landing on it at the boundary. Measured: the
     * 1000×-tier daily shape estimates 1.54 MB pre-explode → ~6 MB
-    * compared (sentinel run, 2026-08-16, SPARK_GRAFT_INC_STATS), so
+    * compared (sentinel run, 2026-08-16; SURVEY §10.21), so
     * daily batches keep two-plus orders of magnitude of headroom while
     * a corpus-scale input (stats scale with the scan) trips.
     * `graft.inc.broadcast.max.bytes` overrides for tests and deliberate
@@ -99,7 +99,7 @@ object IncrementalDedupQueries {
     * (MinHashTextSpec), and `m IS NOT NULL` selects exactly the
     * `size(tk) >= 3` documents, so band rows derived from either frame
     * are interchangeable. Measured A/B on the 100x probe corpus
-    * (TokenProbe, min of 4 runs): 1.42 s -> 1.21 s signature pass, a
+    * (min of 4 runs; SURVEY §10.19): 1.42 s -> 1.21 s signature pass, a
     * ~1.2x wall win — smaller than the SimHash fused walk's 1.6x
     * because [[graft.functions.MinHashSigExpr]] had already eliminated
     * the hex round-trip, so md5 (unchanged by fusion) dominates what
@@ -267,7 +267,7 @@ object IncrementalDedupQueries {
     * per daily batch. On a 1000-executor cluster against a 100 TB index
     * that is a network rewrite of the whole table, twice a day; this
     * shape never shuffles an index row. Interleaved A/B at 1000×
-    * (IncProbe, 5M-doc index, 1k-doc batch, 1.08M pairs either way):
+    * (SURVEY §10.20; 5M-doc index, 1k-doc batch, 1.08M pairs either way):
     * min-of-6 13.6 → 8.8 s quiet, and under external load the gap
     * widens (median 25 → 16 s) because there is no shuffle to contend
     * on. The 4× per-hit verify arithmetic (vs once per distinct pair)
@@ -282,9 +282,6 @@ object IncrementalDedupQueries {
     val est = BigInt(
       batchBands.queryExecution.optimizedPlan.stats.sizeInBytes.toString) *
       Bands
-    if (sys.env.contains("SPARK_GRAFT_INC_STATS"))
-      System.err.println(s"[inc-guard] batch-side estimate $est bytes " +
-        s"post-explode (ceiling $maxBatchBroadcastBytes)")
     if (est > maxBatchBroadcastBytes) refuseBroadcast(est)
     broadcast(batchBands.as("a"))
       .join(bandPayload(index).as("b"),

@@ -234,13 +234,17 @@ object SimilarityQueries {
     * `array<struct<cid, cv, cnorm>>` — the broadcastable form the
     * per-row argmax/probe expressions fold over. sort_array pins the
     * collect_list order (cids are distinct, so the struct order is the
-    * cid order and deterministic).
+    * cid order and deterministic). No centroid, no row: a global
+    * aggregate over zero centroids would still emit one empty array, and
+    * every cross join against it would keep each vector with no list to
+    * join — the oracles' CROSS JOIN against an empty table keeps none.
     */
   private[queries] def centArray(cents: DataFrame): DataFrame =
     cents
       .withColumn("cnorm", sqrt(dot(col("cv"), col("cv"))))
       .agg(sort_array(collect_list(struct(col("cid"), col("cv"), col("cnorm"))))
         .as("cs"))
+      .filter(size(col("cs")) > 0)
 
   /** Per-row argmax centroid over the single-row [[centArray]] column —
     * the assignment step WITHOUT a shuffle (optimization r16): the old
@@ -255,7 +259,9 @@ object SimilarityQueries {
     * ccos improvement, so ties keep the smaller cid; NaN (zero-norm
     * embedding) ranks LARGEST exactly like Spark's struct max ordering —
     * the explicit isnan branches say so rather than falling through to
-    * `>` (which is false for NaN on either side).
+    * `>` (which is false for NaN on either side). A row no centroid
+    * scores (an empty array, or a null cosine) gets a null cid, so
+    * downstream joins drop it rather than file it under a made-up list.
     */
   private def argmaxCid(cs: Column, v: Column, norm: Column): Column = {
     val scored = transform(cs, c => struct(
@@ -263,7 +269,7 @@ object SimilarityQueries {
       c.getField("cid").as("cid")))
     aggregate(
       scored,
-      struct(lit(Double.NegativeInfinity).as("ccos"), lit(Long.MinValue).as("cid")),
+      struct(lit(Double.NegativeInfinity).as("ccos"), lit(null).cast("long").as("cid")),
       (acc, x) => {
         val xc = x.getField("ccos"); val ac = acc.getField("ccos")
         when((isnan(xc) && !isnan(ac)) || (!isnan(xc) && !isnan(ac) && xc > ac), x)

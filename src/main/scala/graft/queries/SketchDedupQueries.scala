@@ -209,7 +209,10 @@ object SketchDedupQueries {
           && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"), estExpr)
       .distinct()
-      .transform(graft.CacheScope.persist) // joined twice in the verify stage
+      // one reader per path since the r16 fused verify (verifyShingleCand
+      // joins it once; the agreement audit unions it once) — the persist
+      // dates from the two-join shape and has not been re-measured
+      .transform(graft.CacheScope.persist)
   }
 
   val qDedupMinhashLshOracle: String = minhashPairsSql("")
@@ -285,8 +288,8 @@ object SketchDedupQueries {
   // design): pigeonhole guarantees any pair within distance 3 shares one
   // of the 4 bands, and 2^15 band values keep candidate generation linear.
   // (An 8-bit-band variant collapses quadratically: at 50k docs every band
-  // value holds ~200 docs -> 10^8 candidate pairs. Measured via
-  // graft.ScaleProbe before this layout was chosen.)
+  // value holds ~200 docs -> 10^8 candidate pairs. Measured at 10x
+  // before this layout was chosen; SURVEY §9.)
   private val SimBits = 60
   private val SimBands = 4             // 4 bands x 15 bits
   private val BandBits = 15
@@ -319,7 +322,7 @@ object SketchDedupQueries {
       .select(col(idCol).as("doc_id"),
         // fused tokenize+hash walk (round 12): the split form allocated
         // one UTF8String per token only for the hash to consume it once
-        // — 1.8x on the signature pass at the 100x corpus (TokenProbe);
+        // — 1.8x on the signature pass at the 100x corpus (SURVEY §10.18);
         // SimHashTextSpec pins per-doc equality with the split chain
         graft.functions.SimHashTextExpr.of(col(textCol)).as("simhash"))
       .filter(col("simhash").isNotNull)
@@ -944,9 +947,9 @@ object SketchDedupQueries {
     // persistEager, not persist (optimization r16): the three detector
     // branches materialize concurrently under AQE, and each concurrent
     // first reader of the lazily-cached base recomputed the tokenize+
-    // shingle pass from source (ScanCountProbe: 4 corpus-scan stages of
-    // 15-27 s execSum in one fold). Populating the cache up front runs
-    // that pass once.
+    // shingle pass from source (4 corpus-scan stages of 15-27 s execSum
+    // in one fold; OPTIMIZATION_r16 §2). Populating the cache up front
+    // runs that pass once.
     val base = shingleBase(documents(spark, dir)).transform(graft.CacheScope.persistEager)
     // Cross-detector FUSED verify (optimization r16): the ngram and
     // minhash generators share setReps and the verify join-back shape,

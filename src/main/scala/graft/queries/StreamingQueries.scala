@@ -404,7 +404,7 @@ object StreamingQueries {
     // array (bands derive from `m` alone), so it takes the fused text
     // walk — same minima bit-for-bit (MinHashTextSpec), ~1.2x the
     // signature-pass throughput and near the bare-scan floor
-    // (TokenProbe A/B at 100x)
+    // (A/B at 100x, SURVEY §10.19)
     val bands = IncrementalDedupQueries.bandRows(
       IncrementalDedupQueries.signaturesSigOnly(src)).as[DocBand]
     bands

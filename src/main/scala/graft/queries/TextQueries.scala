@@ -430,7 +430,8 @@ object TextQueries {
   // Lossless for the threshold — the simple full-index oracle produces
   // identical rows — but candidate volume stays linear even when common
   // shingles appear in hundreds of docs (the naive join was measured
-  // quadratic: 525s at 50k docs vs ~20s with prefixes; graft.ScaleProbe).
+  // quadratic: 525s at 50k docs vs ~20s with prefixes; the 10x scale
+  // probe, SURVEY §9).
   // All threshold arithmetic is integer-exact (t = 3/5): float rounding at
   // prefix/length boundaries could silently drop qualifying pairs.
   def qDedupNgramJaccard(spark: SparkSession, dir: String): DataFrame =

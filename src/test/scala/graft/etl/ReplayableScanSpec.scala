@@ -12,10 +12,11 @@ import graft.SparkSpec
   * its execution-consistency persist, so a leaf class it silently stops
   * recognizing re-enables corpus-scale persists on bulk merges. The
   * leaf matches are now typed (a rename is a compile error), and this
-  * spec asserts the BEHAVIOR each match buys: V1 scans, V2 scans, and
-  * disk-backed caches replay; memory-only caches (which can evict and
-  * recompute from the original source — ADVICE r14 low) and local /
-  * shuffling / non-deterministic plans do not.
+  * spec asserts the BEHAVIOR each match buys: V1 scans, V2 file scans,
+  * and disk-backed caches replay; memory-only caches (which can evict and
+  * recompute from the original source — ADVICE r14 low), V2 scans over a
+  * REST source (a second execution is a second HTTP pull of a live
+  * feed), and local / shuffling / non-deterministic plans do not.
   */
 class ReplayableScanSpec extends SparkSpec {
   import spark.implicits._
@@ -77,5 +78,25 @@ class ReplayableScanSpec extends SparkSpec {
     assert(!Sinks.replayableScan(df.groupBy(col("v")).count()))
     assert(!Sinks.replayableScan(df.join(df.select(col("id")), Seq("id"))))
     assert(!Sinks.replayableScan(df.select(col("id"), rand().as("r"))))
+  }
+
+  test("a REST DSv2 scan is not replayable") {
+    // the daily ingest shape: the arcgis source through the daily
+    // transform. Re-executing it re-fetches every page from the server,
+    // so the sink must keep its consistency persist
+    val dir = Files.createTempDirectory("graft-replay-arcgis")
+    Files.writeString(dir.resolve("features.json"),
+      (1 to 3).map(i =>
+        s"""{"attributes":{"OBJECTID":$i,"ISSUE_DATE":${1704067200000L + i},""" +
+          """"ISSUING_AGENCY_NAME":"MPD","FINE_AMOUNT":"100"}}""")
+        .mkString("""{"features":[""", ",", "]}"))
+    val df = Transforms.violationsFromArcGis(spark.read.format("arcgis")
+      .option("mode", "fixture").option("path", dir.toString).load())
+    val leaves = df.queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.exists(_.isInstanceOf[
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation]),
+      s"expected a DataSourceV2ScanRelation leaf, got: ${leaves.map(_.getClass.getSimpleName)}")
+    assert(df.count() == 3)
+    assert(!Sinks.replayableScan(df))
   }
 }
